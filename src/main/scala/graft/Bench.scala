@@ -27,7 +27,8 @@ object Bench {
     // lot); .count() would let Catalyst prune everything but the filter.
     // Each query runs twice and reports the min — first executions carry
     // JIT/codegen noise that would otherwise dominate round-to-round
-    // variance. A failed query is reported as -1 rather than silently timed.
+    // variance. A failed query is reported as -1 rather than silently timed;
+    // fatal JVM errors (OOM, linkage) propagate, as in the warmup.
     def timeQuery(mk: () => org.apache.spark.sql.DataFrame,
         name: String): Double = {
       val times = (1 to 2).flatMap { _ =>
@@ -35,7 +36,7 @@ object Bench {
         try {
           mk().write.format("noop").mode("overwrite").save()
           Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
+        } catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           None
         } finally {

@@ -64,10 +64,11 @@ object WarehouseSink {
   /** Deduplicated append — closes the reference's double-load hole (its
     * idempotency branch guards the download, but the JDBC append is blind,
     * `etl.py:53-55`): left-anti join against the existing sink keys before
-    * appending. */
+    * appending. No `distinct()` on the keys: an anti join ignores duplicates
+    * on its build side, and Spark would still plan the aggregate. */
   def dedupAppend(df: DataFrame, existing: DataFrame,
       keys: Seq[String]): DataFrame =
-    df.join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    df.join(existing.select(keys.map(col): _*), keys, "left_anti")
 
   /** One partition's compaction verdict from [[compactionPlan]]. */
   case class CompactionEntry(partition: String, n_files: Long,

@@ -309,16 +309,6 @@ object Streams {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
   }
-  /** q119_stream_join — run [[streamIntervalJoin]] end-to-end as a real
-    * streaming query and hash-check the result against the batch range
-    * join. The events fixture splits into two file-source streams (views
-    * as "impressions" keyed by user, purchases as "clicks"); AvailableNow
-    * drains each side in a single batch, so the watermark drops nothing
-    * and the inner join's output equals the batch join the oracle
-    * computes — the state-eviction machinery still runs (both sides are
-    * watermarked and the predicate carries the time bound), it just never
-    * fires inside one batch. Same eager write-then-read structure as the
-    * q04 pipeline. */
   /** Temp dirs of already-staged stream INPUTS, keyed by (fixture, sfDir):
     * the registered streaming queries run several times per bench JVM
     * (2 passes × 2 runs), and re-writing identical source files each time
@@ -348,6 +338,87 @@ object Streams {
       dir.toString
     })
 
+  /** Session conf the transformWithState streams (q222, q249) start under:
+    * transformWithState requires the RocksDB provider, and changelog
+    * checkpointing commits per-batch deltas instead of a full RocksDB
+    * snapshot per partition per batch (kept on r16's A/B for its cost at
+    * real state sizes). */
+  val RocksDbState: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
+
+  /** One state partition per scan split of `bytes` of input:
+    * `clamp(ceil(bytes / maxPartitionBytes), 1, parallelism)`. */
+  private[graft] def statePartitions(bytes: Long, maxPartitionBytes: Long,
+      parallelism: Int): Int = {
+    val splits = bytes / maxPartitionBytes +
+      (if (bytes % maxPartitionBytes == 0) 0 else 1)
+    math.max(1L, math.min(splits, parallelism.toLong)).toInt
+  }
+
+  /** [[statePartitions]] for the bytes staged under `inputDirs`, against
+    * the session's `spark.sql.files.maxPartitionBytes` and default
+    * parallelism. */
+  private[graft] def statePartitions(spark: SparkSession,
+      inputDirs: Seq[String]): Int = {
+    val conf = spark.sessionState.newHadoopConf()
+    val bytes = inputDirs.map { d =>
+      val path = new org.apache.hadoop.fs.Path(d)
+      path.getFileSystem(conf).getContentSummary(path).getLength
+    }.sum
+    statePartitions(bytes, spark.sessionState.conf.filesMaxPartitionBytes,
+      spark.sparkContext.defaultParallelism)
+  }
+
+  /** Start a stateful stream with its state sized to its input — the one
+    * seam every stateful stream (q119, q125, q136, q219, q222, q249, q259)
+    * starts through.
+    *
+    * Invariant: every state-store instance commits a checkpoint file every
+    * micro-batch (on Spark 4.1 a delta plus a checksum file, each with a
+    * `.crc` sidecar), and a stateful operator keeps one or more stores PER
+    * SHUFFLE PARTITION (a stream-stream join keeps four) — so the partition
+    * count, not the state size, sets the fixed per-batch cost. The count is
+    * therefore sized to the input the stream drains ([[statePartitions]]),
+    * never to the session's batch-shuffle default; results are
+    * partitioning-blind (watermarks are global, state is keyed), and every
+    * invocation uses a fresh checkpoint, so the count is free to differ
+    * between runs.
+    *
+    * The count and `extraConf` are set on the caller's session only around
+    * `start`: the query clones the session when it is constructed, inside
+    * `start()`, so the stream keeps them after each key is restored (set
+    * if it was set, unset if not) in `finally` — also when `start` throws.
+    * Concurrent planning can observe them only while the query is built.
+    * Not `spark.newSession()`: a query started there registers with a
+    * different StreamingQueryManager, out of sight of the caller's
+    * listeners. */
+  def startStateful(spark: SparkSession, inputDirs: Seq[String],
+      extraConf: Seq[(String, String)] = Nil)(
+      start: => StreamingQuery): StreamingQuery = {
+    val scoped = ("spark.sql.shuffle.partitions" ->
+      statePartitions(spark, inputDirs).toString) +: extraConf
+    val prev = scoped.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try start
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** q119_stream_join — run [[streamIntervalJoin]] end-to-end as a real
+    * streaming query and hash-check the result against the batch range
+    * join. The events fixture splits into two file-source streams (views
+    * as "impressions" keyed by user, purchases as "clicks"); AvailableNow
+    * drains each side in a single batch, so the watermark drops nothing
+    * and the inner join's output equals the batch join the oracle
+    * computes — the state-eviction machinery still runs (both sides are
+    * watermarked and the predicate carries the time bound), it just never
+    * fires inside one batch. Same eager write-then-read structure as the
+    * q04 pipeline. */
   def q119StreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val root = freshDir("graft-q119")
     // the helper's contract: impressions(imp_id, imp_ts), clicks keyed by
@@ -372,21 +443,13 @@ object Streams {
       .select(col("imp_id").as("user_id"), col("view_id"), col("buy_id"),
         (unix_micros(col("click_ts")) - unix_micros(col("imp_ts")))
           .as("gap_us"))
-    // A stateful streaming op instantiates per-partition state stores
-    // (several per join side), each with checkpoint file traffic every
-    // batch — size the partition count to the STATE, not to the batch
-    // shuffle default (32 here). Fresh checkpoint per invocation, so the
-    // count is free to differ between runs.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    startStateful(spark, Seq(in)) {
       joined.writeStream.format("parquet")
         .option("path", s"$root/out")
         .option("checkpointLocation", s"$root/cp")
         .trigger(Trigger.AvailableNow())
         .start()
-        .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }.awaitTermination()
     spark.read.parquet(s"$root/out")
       .orderBy(col("view_id"), col("buy_id"))
   }
@@ -417,12 +480,7 @@ object Streams {
         .coalesce(1).write.parquet(s"$dir/in")
     }
     val schema = spark.read.parquet(s"$in/in").schema
-    // state-sized partition count, scoped to the stream (q119's note):
-    // dedup keeps one store PER PARTITION, and each commits a delta file
-    // every batch — 8 bounds that fixed cost at any core count
-    val prevPart = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    startStateful(spark, Seq(in)) {
       dedupStream(spark.readStream.schema(schema).parquet(s"$in/in"),
           Seq("user_id", "event_type", "day"), "ts")
         .select(col("user_id"), col("event_type"), col("day"))
@@ -431,8 +489,7 @@ object Streams {
         .option("checkpointLocation", s"$root/cp")
         .trigger(Trigger.AvailableNow())
         .start()
-        .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevPart)
+    }.awaitTermination()
     spark.read.parquet(s"$root/out")
       .orderBy(col("user_id"), col("event_type"), col("day"))
   }
@@ -468,10 +525,7 @@ object Streams {
       ev.unionByName(flush).coalesce(1).write.parquet(s"$dir/in")
     }
     val schema = spark.read.parquet(s"$in/in").schema
-    // state-sized partition count, scoped to the stream — q259's note
-    val prevPart = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    startStateful(spark, Seq(in)) {
       windowedCounts(spark.readStream.schema(schema).parquet(s"$in/in"))
         .writeStream.format("parquet")
         .outputMode("append")
@@ -479,8 +533,7 @@ object Streams {
         .option("checkpointLocation", s"$root/cp")
         .trigger(Trigger.AvailableNow())
         .start()
-        .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevPart)
+    }.awaitTermination()
     spark.read.parquet(s"$root/out")
       .filter(col("event_type") =!= "__flush")
       .orderBy(col("window_start"), col("event_type"))
@@ -567,11 +620,7 @@ object Streams {
     val src = spark.readStream.schema(schema).parquet(s"$in/in")
       .withWatermark("ts", "0 seconds")
       .as[Ev]
-    // one small state machine per user: size partitions to the state
-    // (same rationale as q119's note)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    startStateful(spark, Seq(in)) {
       sessionize(src, gapMinutes = 30)
         .writeStream.format("parquet")
         .outputMode("append")
@@ -579,8 +628,7 @@ object Streams {
         .option("checkpointLocation", s"$root/cp")
         .trigger(Trigger.AvailableNow())
         .start()
-        .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }.awaitTermination()
     spark.read.parquet(s"$root/out")
       .filter(col("user_id") =!= -1L)
       .select(col("user_id"), col("session_start"), col("session_end"),
@@ -645,24 +693,7 @@ object Streams {
       .option("maxFilesPerTrigger", "1").parquet(in)
       .select(col("user_id").as("_1"), col("value").as("_2"))
       .as[(Long, Double)]
-    // transformWithState requires the RocksDB state store; quota state is
-    // one long per user — size partitions to it (q119's rationale). Both
-    // switches scoped and restored.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevPart = spark.conf.get("spark.sql.shuffle.partitions")
-    // changelog checkpointing: commit per-batch DELTAS instead of a full
-    // RocksDB snapshot upload per partition per micro-batch — the
-    // remaining fixed cost of the transformWithState pair (guide §1/§2.4;
-    // r15's deferred A/B, kept on the r16 measurement)
-    val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val prevCl = spark.conf.getOption(clKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(clKey, "true")
-    try {
+    startStateful(spark, Seq(in), RocksDbState) {
       quotaEnforce(src, StreamQuota)
         .writeStream
         .outputMode("update")
@@ -672,18 +703,7 @@ object Streams {
         .option("checkpointLocation", s"$root/cp")
         .trigger(Trigger.AvailableNow())
         .start()
-        .awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevPart)
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None    => spark.conf.unset(provKey)
-      }
-      prevCl match {
-        case Some(v) => spark.conf.set(clKey, v)
-        case None    => spark.conf.unset(clKey)
-      }
-    }
+    }.awaitTermination()
     spark.read.parquet(s"$root/out")
       .select(col("key"), col("arrived"), col("accepted"), col("dropped"),
         col("total"))
@@ -823,18 +843,7 @@ object Streams {
       .select(col("user_id").as("_1"), col("ts_us").as("_2"),
         col("event_id").as("_3"), col("op").as("_4"), col("value").as("_5"))
       .as[(Long, Long, Long, String, Double)]
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevPart = spark.conf.get("spark.sql.shuffle.partitions")
-    // changelog checkpointing — see the q222 note
-    val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val prevCl = spark.conf.getOption(clKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(clKey, "true")
-    try {
+    startStateful(spark, Seq(in), RocksDbState) {
       src.groupByKey(_._1)
         .transformWithState(new CdcProcessor(),
           org.apache.spark.sql.streaming.TimeMode.None(),
@@ -847,18 +856,7 @@ object Streams {
         .option("checkpointLocation", s"$root/cp")
         .trigger(Trigger.AvailableNow())
         .start()
-        .awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevPart)
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None    => spark.conf.unset(provKey)
-      }
-      prevCl match {
-        case Some(v) => spark.conf.set(clKey, v)
-        case None    => spark.conf.unset(clKey)
-      }
-    }
+    }.awaitTermination()
     import org.apache.spark.sql.expressions.Window
     spark.read.parquet(s"$root/out")
       .withColumn("rn", row_number().over(
@@ -952,18 +950,7 @@ object Streams {
       }
     }
     val schema = spark.read.parquet(in).schema
-    // State-sized partitioning (q119's rationale): the windowed aggregate
-    // keeps hours-in-horizon × |event_type| rows of state, but every
-    // micro-batch commits one state-store delta file PER PARTITION — at
-    // the session default (= cores) that is cores × LateBatches checkpoint
-    // commits for a handful of state rows. 8 partitions bounds the fixed
-    // per-batch store/commit overhead at any core count; the conf is
-    // scoped to the stream and restored (results are partitioning-blind:
-    // the watermark is global and the aggregate is keyed). Set AFTER
-    // staging so the one-time fixture build keeps the session's sizing.
-    val prevPart = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    startStateful(spark, Seq(in)) {
       windowedCounts(
         spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(in),
@@ -974,8 +961,7 @@ object Streams {
         .option("checkpointLocation", s"$root/cp")
         .trigger(Trigger.AvailableNow())
         .start()
-        .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevPart)
+    }.awaitTermination()
     spark.read.parquet(s"$root/out")
       .filter(col("event_type") =!= "__flush")
       .orderBy(col("window_start"), col("event_type"))

@@ -104,6 +104,17 @@ class PipelineSpec extends AnyFunSuite {
     val existing = li.limit(400)
     val delta = WarehouseSink.dedupAppend(li, existing, Tables.lineitemKey)
     assert(delta.count() === 600)
+    // the anti join ignores build-side duplicates by itself: no aggregate
+    // stage over the warehouse keys
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val buildSides = delta.queryExecution.sparkPlan.collect {
+      case j: BaseJoinExec if j.joinType == LeftAnti => j.right
+    }
+    assert(buildSides.size === 1, delta.queryExecution.sparkPlan.toString)
+    assert(buildSides.head.collect { case a: HashAggregateExec => a }.isEmpty,
+      s"aggregate under the anti join's build side:\n${buildSides.head}")
     // re-appending the same batch yields nothing
     assert(WarehouseSink.dedupAppend(existing, existing,
       Tables.lineitemKey).count() === 0)

@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.Streams
+
 /** Structured Streaming smoke tests — SURVEY.md §2.8: watermarked event-time
   * windows over a MemoryStream, and exactly-once incremental file ingestion
   * with Trigger.AvailableNow (the streaming-native form of the reference's
@@ -17,6 +19,88 @@ class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.session
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  private val seamKeys =
+    "spark.sql.shuffle.partitions" +: Streams.RocksDbState.map(_._1)
+
+  /** The caller's view of every key the stateful-start seam touches: the
+    * effective value and whether it is set on the session at all. */
+  private def callerConf(): Seq[(Option[String], Option[String])] =
+    seamKeys.map(k => (spark.conf.getOption(k), spark.conf.getAll.get(k)))
+
+  /** The sf0.001 events, staged as a stream input directory. */
+  private lazy val eventsIn: String = {
+    val dir = Files.createTempDirectory("graft-seam-in").toString + "/in"
+    Tables.events(spark, SparkSuite.sf)
+      .select(col("ts"), col("user_id"), col("value"), col("event_type"))
+      .coalesce(1).write.parquet(dir)
+    dir
+  }
+
+  test("state partitions: one per scan split, clamped to [1, parallelism]") {
+    val m = 128L << 20
+    assert(Streams.statePartitions(0L, m, 4) === 1)
+    assert(Streams.statePartitions(m, m, 4) === 1)
+    assert(Streams.statePartitions(m + 1, m, 4) === 2)
+    assert(Streams.statePartitions(Long.MaxValue, m, 4) === 4)
+    assert(Streams.statePartitions(spark, Seq(eventsIn)) === 1)
+  }
+
+  test("startStateful: streams run on the derived count, caller conf " +
+    "restored right after start (HDFS-backed and RocksDB state)") {
+    val sp = spark
+    import sp.implicits._
+    val parts = Streams.statePartitions(sp, Seq(eventsIn))
+    assert(parts === 1)
+    assert(sp.conf.get("spark.sql.shuffle.partitions") != parts.toString,
+      "vacuous: the session default equals the derived count")
+    val before = callerConf()
+    val schema = sp.read.parquet(eventsIn).schema
+    val root = Files.createTempDirectory("graft-seam").toString
+    def src = sp.readStream.schema(schema).parquet(eventsIn)
+
+    val hdfs = Streams.startStateful(sp, Seq(eventsIn)) {
+      Streams.windowedCounts(src)
+        .writeStream.format("noop").outputMode("append")
+        .option("checkpointLocation", s"$root/hdfs")
+        .trigger(Trigger.AvailableNow()).start()
+    }
+    // restored as soon as start returns: the query runs on its own clone
+    assert(callerConf() === before)
+    hdfs.awaitTermination()
+    assert(hdfs.lastProgress.stateOperators.map(_.numShufflePartitions)
+      .toSeq === Seq(parts.toLong))
+
+    val rocks = Streams.startStateful(sp, Seq(eventsIn), Streams.RocksDbState) {
+      Streams.quotaEnforce(
+          src.select(col("user_id").as("_1"), col("value").as("_2"))
+            .as[(Long, Double)], 40L)
+        .writeStream.format("noop").outputMode("update")
+        .option("checkpointLocation", s"$root/rocks")
+        .trigger(Trigger.AvailableNow()).start()
+    }
+    assert(callerConf() === before)
+    rocks.awaitTermination()
+    assert(rocks.lastProgress.stateOperators.map(_.numShufflePartitions)
+      .toSeq === Seq(parts.toLong))
+    // the changelog key reached the stream as well
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    assert(files(new java.io.File(s"$root/rocks/state"))
+      .exists(_.getName.endsWith(".changelog")))
+    assert(callerConf() === before)
+  }
+
+  test("startStateful restores the caller's conf when start throws") {
+    val before = callerConf()
+    intercept[IllegalStateException] {
+      Streams.startStateful(spark, Seq(eventsIn), Streams.RocksDbState) {
+        assert(spark.conf.get("spark.sql.shuffle.partitions") === "1")
+        throw new IllegalStateException("start failed")
+      }
+    }
+    assert(callerConf() === before)
+  }
 
   test("watermarked tumbling window aggregates late data correctly") {
     val sp = spark
@@ -51,19 +135,15 @@ class StreamingSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    // transformWithState requires the RocksDB state store; scope the
-    // provider switch to this query and restore the session default after
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = sp.conf.getOption(key)
-    sp.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files
       .createTempDirectory("tws_quota").toString
     val input = MemoryStream[(Long, Double)]
     val out = graft.streaming.Streams.quotaEnforce(input.toDS(), quota = 3L)
-    val q = out.writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("tws_quota").start()
+    val q = Streams.startStateful(sp, Nil, Streams.RocksDbState) {
+      out.writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .format("memory").queryName("tws_quota").start()
+    }
     try {
       input.addData((1L, 1.0), (1L, 1.0), (2L, 1.0))
       q.processAllAvailable()
@@ -76,13 +156,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(rows === Set(
         (1L, 2L, 2L, 0L, 2L), (2L, 1L, 1L, 0L, 1L),
         (1L, 2L, 1L, 1L, 3L), (2L, 1L, 1L, 0L, 2L)))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => sp.conf.set(key, v)
-        case None    => sp.conf.unset(key)
-      }
-    }
+    } finally q.stop()
   }
 
   test("session window assigns a gap-separated user to two sessions") {

@@ -166,8 +166,9 @@ object Centroids {
     * the pair count: a 20k-row BATCH assigned against a standing
     * corpus's 473 seeds (the sf8 incremental-admission shape) is the
     * same 9.5M-pair job as a 40k self-seeded corpus, and measured
-    * accordingly. The value is the MEASURED crossover (PruneBench,
-    * 3-run medians where contested, min-of-2 timed, 32 cores): at
+    * accordingly. The value is the MEASURED crossover
+    * (SCALE_POINT_r14 §A, 3-run medians where contested, min-of-2
+    * timed, 32 cores): at
     * 2.84M pairs (20k×142) the pruned form's multi-stage pipeline
     * reads +27% (1.88 vs 1.48 s — fixed stage overhead), at 8M pairs
     * (40k×200) it reads −18% (1.83 vs 2.23 s), and the gap widens
@@ -208,60 +209,25 @@ object Centroids {
     * correctness. */
   private val PruneGuard = 1.0 + 1e-9
 
-  /** Row ceiling on the k·kc seed-to-every-coarse-center distance
-    * table when the OWN-CENTER bound of [[prunedPairFrames]] is
-    * enabled: the table must broadcast into the pair fold stage — a
-    * shuffle there would re-exchange the n·k pair rows the whole
-    * pipeline exists to keep in-stage — and k·kc = k^1.5 = n^0.75
-    * rows of three BIGINTs grows without bound, so the bound must
-    * switch off rather than force an unbounded broadcast (2M rows ≈
-    * 48 MB, binding past n ≈ 2·10⁸ vectors). */
-  private[graft] val OwnBoundMaxRows = 2000000L
-
-  /** Production default for the own-center bound: MEASURED OFF
-    * (VERDICT r14 #2, A/B'd and rejected — the
-    * [[HierAssignGate]]/checkpoint discipline of keeping the seam
-    * wired with the measurement as the reason). On the sf8+40k-clone
-    * chain corpus (89.6M pairs) the bound PROVES 17.39M pairs itself
-    * but 99.6% of them are already proven by the seed-cell triangle
-    * bound — 63k genuinely new skips of 85.6M out-of-cell pairs
-    * (+0.07%) — while its broadcast lookup + extra filter over every
-    * pair row cost +62% wall on the whole assignment (tri-only
-    * 9.33 s vs 15.15 s, same-session min-of-2; sf16+80k reads the
-    * same shape). The two bounds fire on the same blob-adjacent mass:
-    * where √D ≈ √R degenerates the first bound, √s ≈ √dxv degenerates
-    * the second the same way (both are projections of the same
-    * concentrated isotropic geometry), so the second bound buys
-    * nothing the first did not — the survivor tail is genuinely
-    * unprunable by exact triangle bounds on this mass. A corpus
-    * family whose geometry separates the two projections can enable
-    * it per call (`ownBoundRows = OwnBoundMaxRows`); the safety proof
-    * and attribution ledger stay spec-pinned either way. */
-  private[graft] val OwnBoundDefaultRows = 0L
-
   /** Internal frames of the Elkan-pruned exact flat assignment — shared
     * by [[assignMembersPruned]] (the operator) and
     * [[prunedAssignAccounting]] (the skip ledger): `incell` the exact
     * in-cell distances (vec_id, fcid, dist), `pairs` the lower-bounded
     * candidate frame for every (vector, out-of-cell seed) with
-    * `prunable` the proven-safe skip predicate over it — the union of
-    * the two independent triangle bounds, each exposed for the skip
-    * ledger's attribution (`prunableTri` through the seed's own cell
-    * center, `prunableOwn` through the vector's own cell center). */
+    * `prunable` the proven-safe skip predicate over it. */
   private[graft] final case class PrunedFrames(incell: DataFrame,
-      pairs: DataFrame, prunable: org.apache.spark.sql.Column, kc: Long,
-      prunableTri: org.apache.spark.sql.Column,
-      prunableOwn: org.apache.spark.sql.Column)
+      pairs: DataFrame, prunable: org.apache.spark.sql.Column, kc: Long)
 
   /** Build [[PrunedFrames]] over a RAW (vec_id, embedding) frame `ea`
     * with seeds (default: `ea` itself) filtered to vec_id < k — the
     * array-kernel twin of [[assignMembers]]' exploded inputs. All
     * distances are [[graft.functions.QuantSqDist]]: exact BIGINT in the
-    * same quantized space, bit-identical to the exploded sum. */
+    * same quantized space, bit-identical to the exploded sum. The
+    * own-center second bound was rejected: +62% wall for +0.07% skips
+    * (SCALE_POINT_r15 §B). */
   private[graft] def prunedPairFrames(ea0: DataFrame, k: Long,
       seedsEa: Option[DataFrame],
-      probeParallelism: Option[Int],
-      ownBoundRows: Long = OwnBoundDefaultRows): PrunedFrames = {
+      probeParallelism: Option[Int]): PrunedFrames = {
     import graft.functions.VectorFunctions.quant_sqdist
     val w = org.apache.spark.sql.expressions.Window
     val ea = ea0.select(col("vec_id"), col("embedding"))
@@ -293,11 +259,6 @@ object Centroids {
         w.partitionBy(col("fcid")).orderBy(col("sd"), col("ccid"))))
       .filter(col("srk") === 1)
       .select(col("fcid"), col("semb"), col("ccid"), col("sd").as("r"))
-    // the full seed-to-every-coarse-center table (k·kc narrow rows —
-    // the pre-argmin sAll re-projected), keyed for the OWN-CENTER
-    // bound's lookup: (seed f, the VECTOR's cell g) → s = d²(f, g)
-    val sOwn = sAll
-      .select(col("fcid"), col("ccid").as("vccid"), col("sd").as("s"))
     val probe = probeParallelism
       .map(p => ea.repartition(p, col("vec_id"))).getOrElse(ea)
     val wv = w.partitionBy(col("vec_id"))
@@ -321,11 +282,6 @@ object Centroids {
         wv.orderBy(col("cd"), col("ccid"))))
       .withColumn("vccid",
         max(when(col("crk") === 1, col("ccid"))).over(wv))
-      // the vector's own-cell coarse distance, carried for the
-      // OWN-CENTER bound — same unordered window frame as vccid, so
-      // no extra sort
-      .withColumn("dxv",
-        max(when(col("crk") === 1, col("cd"))).over(wv))
     // exact pass over the vector's OWN cell's seeds — n·(k/kc)
     // expected array folds. The embedding re-attaches by ONE n-to-n
     // join (n array rows, not n·kc), hinted shuffle_hash: left to
@@ -354,51 +310,24 @@ object Centroids {
     // held no seed (impossible by the q271 no-stranded-member
     // argument, but a frame bug here must surface as extra exact work,
     // not a wrong assignment): ub = ∞ makes every pair non-prunable.
-    val ownBound = k * kc <= ownBoundRows
-    val pairs0 = coarseD
+    val pairs = coarseD
       .filter(col("ccid") =!= col("vccid"))
       .join(ub, Seq("vec_id"), "left")
       .withColumn("ubv", coalesce(col("ub"), lit(Long.MaxValue)))
       .join(probe.hint("shuffle_hash"), Seq("vec_id"))
       .join(scell.select(col("fcid"), col("semb"), col("ccid"),
         col("r")), Seq("ccid"))
-    // the OWN-CENTER bound's lookup rides the same fold stage: sOwn
-    // is k·kc narrow rows, broadcast EXPLICITLY (a planner shuffle on
-    // (fcid, vccid) would re-exchange the n·k pair rows) — bounded by
-    // [[OwnBoundMaxRows]], past which the bound switches off
-    val pairs =
-      if (ownBound) pairs0.join(broadcast(sOwn), Seq("fcid", "vccid"))
-      else pairs0
     // Elkan skip, proven-safe: d(x,f) ≥ |√D − √R| (triangle inequality
     // through f's own cell center), so f is skippable when
     // (√D − √R)² > ub ⟺ m := D + R − ub > 0 ∧ m² > 4·D·R. The square
     // is tested in doubles with [[PruneGuard]] slack (exact-safe — see
     // its doc); m itself is exact LONG (D + R < 2⁵¹, no overflow).
     val m = col("cd") + col("r") - col("ubv")
-    val prunableTri = (m > 0L) &&
+    val prunable = (m > 0L) &&
       (m.cast("double") * m.cast("double") >
         lit(4.0) * col("cd").cast("double") * col("r").cast("double") *
           lit(PruneGuard))
-    // SECOND bound (VERDICT r14 #2 — the triangle bound through the
-    // seed's cell degenerates when √D ≈ √R, which is exactly the
-    // survivor mass): the same inequality through the VECTOR's own
-    // cell center g, d(x,f) ≥ |√s − √dxv| with s = d²(f, g) and
-    // dxv = d²(x, g) — both exact BIGINTs in the same quantized
-    // space, both directions of the triangle valid, same
-    // double-domain square test with the same guard. Independent of
-    // the first bound (different projection axis), so the union
-    // prunes pairs either alone cannot.
-    val prunableOwn =
-      if (!ownBound) lit(false)
-      else {
-        val m2 = col("s") + col("dxv") - col("ubv")
-        (m2 > 0L) &&
-          (m2.cast("double") * m2.cast("double") >
-            lit(4.0) * col("s").cast("double") *
-              col("dxv").cast("double") * lit(PruneGuard))
-      }
-    PrunedFrames(incell, pairs, prunableTri || prunableOwn, kc,
-      prunableTri, prunableOwn)
+    PrunedFrames(incell, pairs, prunable, kc)
   }
 
   /** Elkan/Hamerly-pruned EXACT nearest-seed assignment (VERDICT r13
@@ -434,10 +363,8 @@ object Centroids {
     * exceeds ub. Returns (vec_id, cid, dist). */
   private[graft] def assignMembersPruned(ea: DataFrame, k: Long,
       seedsEa: Option[DataFrame] = None,
-      probeParallelism: Option[Int] = None,
-      ownBoundRows: Long = OwnBoundDefaultRows): DataFrame = {
-    val pf = prunedPairFrames(ea, k, seedsEa, probeParallelism,
-      ownBoundRows)
+      probeParallelism: Option[Int] = None): DataFrame = {
+    val pf = prunedPairFrames(ea, k, seedsEa, probeParallelism)
     val wv = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id"))
     // survivor distances fold IN the pair stage (both arrays are
@@ -484,27 +411,18 @@ object Centroids {
     * pair to prove dist > ub). */
   private[graft] def prunedAssignAccounting(ea: DataFrame, n: Long,
       k: Long, seedsEa: Option[DataFrame] = None,
-      probeParallelism: Option[Int] = None,
-      ownBoundRows: Long = OwnBoundDefaultRows): DataFrame = {
-    val pf = prunedPairFrames(ea, k, seedsEa, probeParallelism,
-      ownBoundRows)
+      probeParallelism: Option[Int] = None): DataFrame = {
+    val pf = prunedPairFrames(ea, k, seedsEa, probeParallelism)
     val outcell = pf.pairs.agg(
       coalesce(sum(when(pf.prunable, 1L).otherwise(0L)), lit(0L))
         .as("pairs_pruned"),
       coalesce(sum(when(pf.prunable, 0L).otherwise(1L)), lit(0L))
-        .as("pairs_survivor"),
-      // by-bound attribution (overlapping — a pair both bounds prove
-      // is counted in each; `pairs_pruned` is their union)
-      coalesce(sum(when(pf.prunableTri, 1L).otherwise(0L)), lit(0L))
-        .as("pairs_pruned_tri"),
-      coalesce(sum(when(pf.prunableOwn, 1L).otherwise(0L)), lit(0L))
-        .as("pairs_pruned_own"))
+        .as("pairs_survivor"))
     pf.incell.agg(count(lit(1)).as("pairs_incell"))
       .crossJoin(outcell)
       .select(lit(n).as("n"), lit(k).as("k"), lit(pf.kc).as("kc"),
         lit(n * k).as("pairs_total"), col("pairs_incell"),
-        col("pairs_pruned"), col("pairs_survivor"),
-        col("pairs_pruned_tri"), col("pairs_pruned_own"))
+        col("pairs_pruned"), col("pairs_survivor"))
   }
 
   /** Deterministic sample for the q271/q277 exact-agreement audits and
@@ -2332,21 +2250,13 @@ object Centroids {
     * only (the planted-locality spec forces the two-level form;
     * [[SemScaleGate]] is the unrelated persist gate below), and
     * `autoProbeGate` overrides [[HierAutoProbeGate]] so the auto-probe
-    * spec can exercise [[resolveAssignGate]] at fixture size.
-    * `stageProbe` is the attribution seam (VERDICT r12 #2): invoked
-    * with each stage's frame as it is defined, default a no-op with
-    * zero plan impact — [[graft.IncrStageBench]] passes a timing
-    * callback to decompose the operator's wall cost per stage at the
-    * HotBench scale points. Forcing a NON-persisted stage (the compare
-    * aggregates) makes the final assembly recompute it, so the
-    * instrumented TOTAL exceeds the production run — per-stage numbers
-    * are the meaningful output, each measured from its own persisted
-    * inputs. */
+    * spec can exercise [[resolveAssignGate]] at fixture size. The
+    * per-stage cost decomposition at the hot-cluster scale points is
+    * recorded in SCALE_POINT_r13 §B and SCALE_POINT_r14 §A. */
   private[graft] def incrSemDedup(e: DataFrame,
       cap: Option[Long] = None,
       assignGate: Long = HierAssignGate,
-      autoProbeGate: Long = HierAutoProbeGate,
-      stageProbe: (String, DataFrame) => Unit = (_, _) => ()): DataFrame = {
+      autoProbeGate: Long = HierAutoProbeGate): DataFrame = {
     val isBatch = pmod(col("vec_id"), lit(IncrSemMod)) === 0L
     val standing = e.filter(!isBatch)
     val nSt = standing.count()
@@ -2376,7 +2286,6 @@ object Centroids {
       autoProbeGate, frameLabel = "standing")
     val membersSt = semAssign(stQv, nSt, kcut, gate = gate,
       arrays = Some(standing)).persist()
-    stageProbe("assign_standing", membersSt)
     // batch sized by the standing corpus — it is a fixed fraction of
     // it, so the gate/geometry/spread decisions must match the corpus's
     val membersB = semAssign(qv.filter(isBatch), nSt, kcut,
@@ -2388,7 +2297,6 @@ object Centroids {
       frameN = nSt / (IncrSemMod - 1L) + 1L, frameLabel = "batch",
       arrays = Some(e.filter(isBatch)), seedArrays = Some(standing))
       .persist()
-    stageProbe("assign_batch", membersB)
     val emb = e.select(col("vec_id"), col("embedding"))
     val stSizes = membersSt.groupBy(col("cid")).agg(count(lit(1)).as("cm"))
     val bSizes = membersB.groupBy(col("cid")).agg(count(lit(1)).as("cm"))
@@ -2426,19 +2334,15 @@ object Centroids {
         if (scaleUp) f.persist() else f
       }
       val mSt = joined(membersSt)
-      stageProbe("side_standing", mSt)
       val mB = joined(membersB)
-      stageProbe("side_batch", mB)
       val droppedSt = simPairs(
         mSt.select(col("cid"), col("vec_id").as("v1"),
           col("embedding").as("e1")),
         mSt.select(col("cid"), col("vec_id").as("v2"),
           col("embedding").as("e2")))
         .select(col("v2")).distinct()
-      stageProbe("standing_pairs_drops", droppedSt)
       val keptSt = mSt.join(droppedSt.withColumnRenamed("v2", "vec_id"),
         Seq("vec_id"), "left_anti")
-      stageProbe("kept_index", keptSt)
       val corpus = keptSt.select(col("cid"), col("vec_id").as("s"),
           col("embedding").as("es"))
         .join(mB.select(col("cid"), col("vec_id").as("b"),
@@ -2446,14 +2350,12 @@ object Centroids {
         .filter(round(Similarity.cosine(col("eb"), col("es")), 4)
           >= lit(SemDedupTau))
         .groupBy(col("b")).agg(min(col("s")).as("corpus_rep"))
-      stageProbe("corpus_compare", corpus)
       val batch = simPairs(
         mB.select(col("cid"), col("vec_id").as("v1"),
           col("embedding").as("e1")),
         mB.select(col("cid"), col("vec_id").as("v2"),
           col("embedding").as("e2")))
         .groupBy(col("v2")).agg(min(col("v1")).as("batch_rep"))
-      stageProbe("batch_compare", batch)
       (mB.select(col("vec_id"), col("cid")), corpus, batch)
     } else {
       // ---- capped+salted regime: a mega-cluster exists. All three
@@ -2466,10 +2368,8 @@ object Centroids {
       // hot cluster for materialization to pay at any n.
       val mSt = membersSt.withColumn("crk", row_number().over(win))
         .join(emb, Seq("vec_id")).persist()
-      stageProbe("side_standing", mSt)
       val mB = membersB.withColumn("crk", row_number().over(win))
         .join(emb, Seq("vec_id")).persist()
-      stageProbe("side_batch", mB)
       val droppedSt = cappedClusterJoin(e.sparkSession, stSizes, capVal,
         left = mSt.filter(col("crk") <= capVal)
           .select(col("cid"), col("vec_id").as("v1"),
@@ -2481,7 +2381,6 @@ object Centroids {
         .filter(round(Similarity.cosine(col("e1"), col("e2")), 4)
           >= lit(SemDedupTau))
         .select(col("v2")).distinct()
-      stageProbe("standing_pairs_drops", droppedSt)
       // the standing index: in production a stored table (q261's
       // framing). srk re-ranks the KEPT members per cluster — the cap on
       // the corpus compare admits the srk-lowest kept representatives,
@@ -2493,7 +2392,6 @@ object Centroids {
           Seq("vec_id"), "left_anti")
         .withColumn("srk", row_number().over(win))
         .persist()
-      stageProbe("kept_index", keptSt)
       // corpus compare: the bounded side (≤cap kept reps) replicates
       // when the BATCH cluster is hot, the batch side carries the salt
       val corpus = cappedClusterJoin(e.sparkSession, bSizes, capVal,
@@ -2506,7 +2404,6 @@ object Centroids {
         .filter(round(Similarity.cosine(col("eb"), col("es")), 4)
           >= lit(SemDedupTau))
         .groupBy(col("b")).agg(min(col("s")).as("corpus_rep"))
-      stageProbe("corpus_compare", corpus)
       val batch = cappedClusterJoin(e.sparkSession, bSizes, capVal,
         left = mB.filter(col("crk") <= capVal)
           .select(col("cid"), col("vec_id").as("v1"),
@@ -2518,7 +2415,6 @@ object Centroids {
         .filter(round(Similarity.cosine(col("e1"), col("e2")), 4)
           >= lit(SemDedupTau))
         .groupBy(col("v2")).agg(min(col("v1")).as("batch_rep"))
-      stageProbe("batch_compare", batch)
       (mB.select(col("vec_id"), col("cid")), corpus, batch)
     }
     mBsel

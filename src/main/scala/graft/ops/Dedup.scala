@@ -830,7 +830,9 @@ object Dedup {
     * shuffles move (doc_id, band, sig) tuples and the bucket-count join gets
     * map-side combine; the reference-truth side is computed once and cut.
     * All counts are integers; the two ratios are single IEEE divisions —
-    * hash-exact cross-engine. */
+    * hash-exact cross-engine. Every config yields a row even on an empty
+    * corpus (n_docs = 0, NULL counts and ratios), as the oracle's global
+    * aggregate per config does. */
   def q223LshSweep(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val signed = signatures(docs).cutLineage()
@@ -864,7 +866,7 @@ object Dedup {
     val flag = buckets.join(counts, Seq("nb", "band", "sig"))
       .groupBy(col("nb"), col("doc_id")).agg(max(col("cn")).as("mx"))
       .select(col("nb"), col("doc_id"), (col("mx") >= 2L).as("lsh_dup"))
-    flag.join(ref, Seq("doc_id"))
+    val perNb = flag.join(ref, Seq("doc_id"))
       .groupBy(col("nb"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("lsh_dup") && col("ref_dup"), 1L).otherwise(0L))
@@ -875,9 +877,13 @@ object Dedup {
           .as("fn"),
         sum(when(!col("lsh_dup") && !col("ref_dup"), 1L).otherwise(0L))
           .as("tn"))
+    spark.range(1)
+      .select(explode(array(SweepBands.map(lit(_)): _*)).as("nb"))
+      .join(broadcast(perNb), Seq("nb"), "left")
       .select(col("nb").as("n_bands"),
         expr(s"$NumHashes div nb").cast("int").as("rows_per_band"),
-        col("n_docs"), col("tp"), col("fp"), col("fn"), col("tn"),
+        coalesce(col("n_docs"), lit(0L)).as("n_docs"),
+        col("tp"), col("fp"), col("fn"), col("tn"),
         when(col("tp") + col("fp") === 0L, lit(0.0))
           .otherwise(col("tp").cast("double") / (col("tp") + col("fp")))
           .as("lsh_precision"),

@@ -435,7 +435,7 @@ object Similarity {
     * the scaled-k dial resolve was the last heavy un-pruned kernel:
     * one corpus×k cosine assignment, O(n^1.5·d), 69.6 s at 320k). The
     * [[graft.ops.Centroids.PrunedAssignPairGate]] discipline: gate on
-    * the WORK unit (pairs), measured crossover (IvfPruneBench,
+    * the WORK unit (pairs), measured crossover (SCALE_POINT_r15 §A,
     * same-session min-of-2, organic corpora — the no-locality worst
     * case for the bound): flat 2.12 s vs pruned 1.86 s at 2.84M pairs
     * (sf1, k = 142), flat 16.49 vs 2.57 at 22.6M (sf4, k = 283,

@@ -95,6 +95,22 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("q223 sweep on an empty corpus: one row per config, like the oracle") {
+    // the oracle runs one global aggregate per config, so zero documents
+    // still yield a row per n_bands: n_docs 0, every sum and ratio NULL
+    val sfDir = java.nio.file.Files.createTempDirectory("graft-q223-empty")
+      .toString
+    Tables.documents(spark, SparkSuite.sf).limit(0)
+      .write.parquet(s"$sfDir/documents.parquet")
+    val rows = ops.Dedup.q223LshSweep(spark, sfDir).collect()
+    assert(rows.map(_.getAs[Int]("n_bands")).toSeq === Seq(2, 4, 8, 16))
+    rows.foreach { r =>
+      assert(r.getAs[Long]("n_docs") === 0L)
+      Seq("tp", "fp", "fn", "tn", "lsh_precision", "lsh_recall")
+        .foreach(c => assert(r.isNullAt(r.fieldIndex(c)), s"$c not NULL"))
+    }
+  }
+
   test("ngram jaccard: q72 on fixture matches per-pair recomputation") {
     val out = ops.Dedup.q72NgramJaccard(spark, SparkSuite.sf)
     val row = out.head()

@@ -79,7 +79,7 @@ class PrunedAssignSpec extends AnyFunSuite {
 
   test("pruned assignment bit-identical on a clone blob; every skip safe") {
     // fixture + 100 clones of vector 0 above the id range — the
-    // HotBench adversarial shape at spec scale
+    // hot-cluster adversarial shape (SCALE_POINT_r11 §C) at spec scale
     val e0 = Tables.embeddings(spark, SparkSuite.sf)
       .select(col("vec_id"), col("embedding"))
     val maxId = e0.agg(max(col("vec_id"))).head().getLong(0)
@@ -116,6 +116,8 @@ class PrunedAssignSpec extends AnyFunSuite {
       .select(col("vec_id").as("fcid"), col("embedding").as("semb"))
     val skipped = pf.pairs.filter(pf.prunable)
       .select(col("vec_id"), col("fcid"), col("ubv"))
+    // the ledger counts exactly the pairs the operator skips
+    assert(prunedN === skipped.count())
     val unsafe = skipped
       .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .join(broadcast(sa), Seq("fcid"))
@@ -123,66 +125,6 @@ class PrunedAssignSpec extends AnyFunSuite {
         <= col("ubv"))
     assert(unsafe.count() === 0,
       "a pruned pair's exact distance must strictly exceed its bound")
-  }
-
-  test("own-center bound (VERDICT r14 #2): attribution conserves, it " +
-    "prunes pairs the seed-cell bound misses, and every skip it alone " +
-    "proves is safe on recomputation") {
-    // the clone-blob corpus — the regime whose survivor tail the
-    // second bound targets (√D ≈ √R pairs the first bound cannot cut)
-    val e0 = Tables.embeddings(spark, SparkSuite.sf)
-      .select(col("vec_id"), col("embedding"))
-    val maxId = e0.agg(max(col("vec_id"))).head().getLong(0)
-    val proto = e0.filter(col("vec_id") === 0L)
-      .head().getSeq[Float](1).toArray
-    val rng = new scala.util.Random(31)
-    val sp = spark
-    import sp.implicits._
-    val clones = (0 until 100).map { i =>
-      (maxId + 1 + i,
-        proto.map(x => x + 0.001f * rng.nextGaussian().toFloat))
-    }
-    val e = e0.unionByName(clones.toDF("vec_id", "embedding"))
-    val n = e.count()
-    // production default: the own-center bound is MEASURED OFF
-    // (OwnBoundDefaultRows — +62% wall for +0.07% skips, its doc)
-    val acctProd = ops.Centroids.prunedAssignAccounting(e, n, k(n)).head()
-    assert(acctProd.getLong(8) === 0L,
-      "the production default must keep the own-center bound off")
-    assert(acctProd.getLong(5) === acctProd.getLong(7),
-      "with the bound off, pruned === tri")
-    // enabled arm: attribution conserves and the bound proves pairs
-    val acct = ops.Centroids.prunedAssignAccounting(e, n, k(n),
-      ownBoundRows = ops.Centroids.OwnBoundMaxRows).head()
-    val (union, tri, own) =
-      (acct.getLong(5), acct.getLong(7), acct.getLong(8))
-    assert(union <= tri + own && union >= math.max(tri, own),
-      s"union $union must sit between max($tri, $own) and their sum")
-    assert(own > 0L, "the own-center bound must prune on the blob")
-    assert(union > tri,
-      "the own-center bound must prune pairs the seed-cell bound missed")
-
-    // safety of the pairs ONLY the own-center bound proves: recompute
-    // their exact distances — strictly above the upper bound
-    val pf = ops.Centroids.prunedPairFrames(e, k(n), None, None,
-      ownBoundRows = ops.Centroids.OwnBoundMaxRows)
-    val sa = e.filter(col("vec_id") < k(n))
-      .select(col("vec_id").as("fcid"), col("embedding").as("semb2"))
-    val unsafe = pf.pairs.filter(pf.prunableOwn && !pf.prunableTri)
-      .select(col("vec_id"), col("fcid"), col("ubv"))
-      .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(sa), Seq("fcid"))
-      .filter(VectorFunctions.quant_sqdist(col("embedding"), col("semb2"))
-        <= col("ubv"))
-    assert(unsafe.count() === 0,
-      "an own-center-pruned pair's exact distance must exceed its bound")
-
-    // and the enabled arm stays bit-identical to the flat assignment
-    val flat = ops.Centroids.assignMembers(
-      ops.Centroids.quantized(e), k(n), hintCentroids = false)
-    val prunedOwn = ops.Centroids.assignMembersPruned(e, k(n),
-      ownBoundRows = ops.Centroids.OwnBoundMaxRows)
-    assert(rows(flat) === rows(prunedOwn))
   }
 
   test("pruned assignment plan shape: the hinted shuffle_hash array " +

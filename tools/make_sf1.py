@@ -21,7 +21,7 @@ Only the tables the iterative family reads are scaled:
               Rotation keeps lengths (n_chars) and intra-replica
               duplicate structure bit-identical.
 
-Usage: python3 tools/make_sf1.py [outdir] [replicas] [embeddings_only]
+Usage: python3 tools/make_sf1.py [outdir] [replicas]
        (defaults /tmp/graft-sf1, 10; replicas=20 builds the sf2 point
        for the round-8 scaling-exponent campaign)
 
@@ -30,18 +30,6 @@ permutations — replica 26 would be byte-identical text to replica 0
 under new doc_ids, i.e. a planted corpus-wide near-dup layer that
 densifies q83/q70 quadratically and measures the replication artifact,
 not the engine.
-
-embeddings_only mode (r12, for the HotBench sf4 point): pass a third
-arg `embeddings_only` to write just embeddings.parquet. The embedding
-transform family is a 64-position circular shift composed with an
-optional global negation (r13, for the sf8 point) — 128 distinct
-orthogonal transforms, each norm- and intra-replica-geometry-
-preserving while cross-replica cosines scramble — so this mode allows
-up to 128 replicas (HotBench reads only the embeddings table; the
-26-replica text cap does not apply). Negation is as artifact-free as
-rotation: no replica pair is byte-identical, and cos(-x, y) = -cos(x,
-y) keeps cross-replica similarities as scrambled as the rotation
-already left them.
 """
 import sys
 
@@ -50,13 +38,7 @@ import duckdb
 SRC = "/root/testdata/sf0.1"
 OUT = sys.argv[1] if len(sys.argv) > 1 else "/tmp/graft-sf1"
 REPLICAS = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-EMB_ONLY = len(sys.argv) > 3 and sys.argv[3] == "embeddings_only"
-if EMB_ONLY:
-    assert 1 <= REPLICAS <= 1024, \
-        "embedding rotation x negation x reversal x pairswap x " \
-        "altneg supports at most 1024 replicas"
-else:
-    assert 1 <= REPLICAS <= 26, "text rotation supports at most 26 replicas"
+assert 1 <= REPLICAS <= 26, "text rotation supports at most 26 replicas"
 ORD_OFF, PART_OFF, SUPP_OFF, CUST_OFF, DOC_OFF = (
     150000, 20000, 1000, 15000, 5000)
 
@@ -68,85 +50,10 @@ def rot(s: str, i: int) -> str:
     return s[i:] + s[:i]
 
 
-def emb_only(con) -> None:
-    # transform i = rotation by (i mod 64), composed with reversal for
-    # (i // 128) odd, negation for (i // 64) odd, ADJACENT-PAIR SWAP
-    # for (i // 256) odd, and ALTERNATING-POSITION NEGATION for
-    # (i // 512) odd — the dihedral group D64 (rotations +
-    # reflections, 128 distinct permutations) crossed with global
-    # negation, the pair-swap involution, and the alt-neg involution
-    # = 1024 distinct orthogonal transforms (r15: pair swap for the
-    # sf32 point, alt-neg headroom for the r16 sf64 point; r14 capped
-    # at the D64 x negation 256). Pair swap ((0 1)(2 3)... on the
-    # 0-based positions) is NOT in D64: a rotation is a constant
-    # shift and a reflection is i -> s - i for one fixed s, while
-    # pair swap needs s = 2i + 1 to vary with i — so composing it
-    # doubles the family rather than aliasing it. Alt-neg (negate
-    # every other component, applied INNERMOST) doubles it again:
-    # every composition of the other four generators carries a
-    # UNIFORM sign pattern (the permutations are unsigned and global
-    # negation flips all signs together), so a mixed-sign transform
-    # can never alias one — T1∘altneg = T2 would need altneg =
-    # T1⁻¹∘T2, uniform-signed. All five are norm- and
-    # intra-replica-geometry-preserving (signed permutations), no
-    # replica pair byte-identical (asserted below), cross-replica
-    # cosines scrambled. The REPLICAS <= 1024 assert above is the
-    # real guard: replica 1024 would repeat transform 0 and plant
-    # byte-identical embedding copies, the exact artifact the cap
-    # exists to prevent (ADVICE r12: the guard is the assert, never a
-    # silent wrap).
-    def emb_expr(i: int) -> str:
-        base = "embedding"
-        if (i // 512) % 2 == 1:
-            base = (f"list_transform(range(1, 65), j -> "
-                    f"CASE WHEN j % 2 = 1 THEN ({base})[j] "
-                    f"ELSE -(({base})[j]) END)")
-        if (i // 256) % 2 == 1:
-            base = (f"list_transform(range(1, 65), j -> ({base})["
-                    "j + CASE WHEN j % 2 = 1 THEN 1 ELSE -1 END])")
-        rot = i % 64
-        e = (f"list_slice({base}, {rot + 1}, 64)"
-             f" || list_slice({base}, 1, {rot})")
-        if (i // 128) % 2 == 1:
-            e = f"list_reverse({e})"
-        if (i // 64) % 2 == 1:
-            e = f"list_transform({e}, x -> -x)"
-        return e
-    emb_selects = " UNION ALL ".join(
-        f"""SELECT vec_id + {i} * 2000 AS vec_id,
-               {emb_expr(i)} AS embedding,
-               label
-            FROM '{SRC}/embeddings.parquet'""" for i in range(REPLICAS))
-    con.execute(
-        f"COPY ({emb_selects}) TO '{OUT}/embeddings.parquet' "
-        "(FORMAT PARQUET)")
-    n = con.execute(
-        f"SELECT count(*) FROM '{OUT}/embeddings.parquet'").fetchone()[0]
-    # distinctness audit: every replica of a sample source vector must
-    # be a DISTINCT byte pattern (a generic vector has trivial
-    # stabilizer under signed permutations; an aliasing bug in the
-    # transform family would collapse two replicas to identical bytes
-    # — the exact planted-near-dup artifact the family exists to
-    # avoid). Checked on three sample ids, not just one, in case a
-    # single embedding happens to be symmetric.
-    for sid in (7, 131, 997):
-        tot, dis = con.execute(
-            f"SELECT count(*), count(DISTINCT embedding::VARCHAR) "
-            f"FROM '{OUT}/embeddings.parquet' "
-            f"WHERE vec_id % 2000 = {sid}").fetchone()
-        assert tot == dis == REPLICAS, \
-            f"transform aliasing at source id {sid}: {dis}/{tot} distinct"
-    print(f"[make_sf1] embeddings (only): {n} rows -> {OUT} "
-          f"({REPLICAS} replicas, distinctness audited)")
-
-
 def main() -> None:
     import os
     os.makedirs(OUT, exist_ok=True)
     con = duckdb.connect()
-    if EMB_ONLY:
-        emb_only(con)
-        return
 
     def replicate(table: str, select_i: str) -> None:
         parts = " UNION ALL ".join(
